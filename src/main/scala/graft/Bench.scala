@@ -1,9 +1,8 @@
 package graft
 
-import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
-import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: run every registered query at SPARK_GRAFT_SF_DIR,
   * print ONE JSON line at the end plus per-query progress on stderr.
@@ -25,6 +24,10 @@ import org.apache.spark.sql.SparkSession
   *    the JVM-wide collector time overlapping the reported run — a slow
   *    query with high gc share is memory-pressure noise, one with low gc
   *    share is genuinely slow;
+  *  - `jobs`, `stages`, `tasks` and `task_s` (parallel maps, same run)
+  *    are that run's Spark census from [[Harness.Census]] — many jobs with
+  *    little task time is per-job fixed cost, task time near
+  *    wall × cores is compute;
   *  - TWO fixed sentinels are re-timed at session start, middle, and end:
   *    a ~1 s scan/project probe (q_p11_date_parts — CPU/scheduler
   *    contention) and a generated heap-heavy aggregation (memory
@@ -45,8 +48,6 @@ import org.apache.spark.sql.SparkSession
   *    the artifact to the sidecar instead of clobbering the clean one.
   */
 object Bench {
-
-  private final case class RunResult(sec: Double, gcMs: Long, ok: Boolean)
 
   final case class Probe(times: Seq[Double], drift: Double, contended: Boolean)
 
@@ -118,18 +119,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val perQuerySec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "120").toLong
+    val perQuerySec = Harness.queryTimeoutSec
     val runsPerQuery = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    val spark = Sessions.local("bench")
+    val census = Harness.Census.attach(spark)
 
     // warm the JVM/codegen paths once so the first measured query isn't
     // charged ~5 s of JIT + classloading (the cluster-steady-state number
@@ -137,43 +130,13 @@ object Bench {
     try graft.sources.Tables.names.foreach { n =>
       graft.sources.Tables(spark, sfDir, n).limit(1000)
         .write.mode("overwrite").format("noop").save()
-    } catch { case e: Throwable => System.err.println(s"[bench] warmup: ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] warmup: ${e.getMessage}") }
 
-    import scala.jdk.CollectionConverters._
-    def gcMs: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-
-    /** One timed noop-sink execution with job-group timeout enforcement,
-      * followed by cache/persist cleanup so one allocation-heavy plan
-      * doesn't tax its successors' numbers (catalog.clearCache only drops
-      * SQL-cached relations — localCheckpoint blocks live as persisted
-      * RDDs and otherwise linger until the ContextCleaner happens to run).
-      */
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): RunResult = {
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-      val gc0 = gcMs
-      val t0 = System.nanoTime()
-      val fut = Future {
+    /** One timed noop-sink execution (the sink runs the full plan). */
+    def runOnce(name: String, fn: (SparkSession, String) => DataFrame): Harness.Run =
+      Harness.timed(spark, name, perQuerySec, census) {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       }
-      val ok =
-        try { Await.result(fut, perQuerySec.seconds); true }
-        catch {
-          case _: TimeoutException =>
-            spark.sparkContext.cancelJobGroup(name)
-            System.err.println(s"[bench] $name TIMED OUT after ${perQuerySec}s")
-            false
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-        }
-      spark.sparkContext.clearJobGroup()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      RunResult(sec, gcMs - gc0, ok)
-    }
 
     /** min-of-N: report the fastest successful run (and ITS gc overlap —
       * the pair describes one actual execution, not a min/min chimera).
@@ -189,9 +152,9 @@ object Bench {
       */
     val streamRuns = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_STREAM_RUNS", "1").toInt)
-    def runMeasured(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): RunResult = {
+    def runMeasured(name: String, fn: (SparkSession, String) => DataFrame): Harness.Run = {
       val runs = if (name.startsWith("q_stream")) streamRuns else runsPerQuery
-      var best: RunResult = runOnce(name, fn)
+      var best = runOnce(name, fn)
       var i = 1
       while (best.ok && i < runs) {
         val r = runOnce(name, fn)
@@ -201,11 +164,7 @@ object Bench {
       best
     }
 
-    // dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_simhash runs the matching
-    // prefixes only; unset (the driver's mode) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val selected = Harness.selectedQueries
 
     // contention sentinel: one fixed query timed at session start, middle,
     // and end. It measures the HOST under this session, not the engine —
@@ -228,7 +187,7 @@ object Bench {
     // dependency), so host memory pressure / GC steal moves it the way it
     // moves the big dedup/sketch queries.
     val heavyName = "generated_heavy_agg"
-    def heavyFn(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+    def heavyFn(s: SparkSession, d: String): DataFrame = {
       import org.apache.spark.sql.functions._
       s.range(0L, 12000000L, 1, 32)
         .select((col("id") % 1500000L).as("k"),
@@ -241,7 +200,7 @@ object Bench {
     }
 
 
-    final case class Pass(results: Seq[(String, RunResult)],
+    final case class Pass(results: Seq[(String, Harness.Run)],
                           scan: Probe, heavy: Probe, probeFailed: Boolean,
                           contended: Boolean)
 
@@ -283,8 +242,10 @@ object Bench {
       val results = selected.zipWithIndex.map { case ((name, fn), idx) =>
         if (idx == mid) timeSentinels("mid")
         val r = runMeasured(name, fn)
+        val c = r.counts
         System.err.println(
-          f"[bench] $name%-28s ${r.sec}%8.2fs gc=${r.gcMs}%dms ${if (r.ok) "" else "(FAILED)"}")
+          f"[bench] $name%-28s ${r.sec}%8.2fs gc=${r.gcMs}%dms jobs=${c.jobs}%d " +
+            f"tasks=${c.tasks}%d task=${c.taskMs / 1000.0}%.2fs ${if (r.ok) "" else "(FAILED)"}")
         name -> r
       }
       timeSentinels("end")
@@ -327,8 +288,15 @@ object Bench {
     val qs = results.map { case (k, r) =>
       "\"" + k + "\":" + (if (r.ok) f"${r.sec}%.3f" else "-1.0")
     }.mkString("{", ",", "}")
-    val gcs = results.map { case (k, r) => "\"" + k + "\":" + r.gcMs }
-      .mkString("{", ",", "}")
+    def perQuery(v: Harness.Run => String): String =
+      results.map { case (k, r) => "\"" + k + "\":" + v(r) }.mkString("{", ",", "}")
+    val gcs = perQuery(_.gcMs.toString)
+    val censusMaps = Seq(
+      "jobs" -> perQuery(_.counts.jobs.toString),
+      "stages" -> perQuery(_.counts.stages.toString),
+      "tasks" -> perQuery(_.counts.tasks.toString),
+      "task_s" -> perQuery(r => f"${r.counts.taskMs / 1000.0}%.3f"))
+      .map { case (k, m) => s""""$k":$m""" }.mkString(",")
     val total = results.collect { case (_, r) if r.ok => r.sec }.sum
     // any erroring/timed-out query makes the headline total incomparable
     // to other rounds (it silently sums fewer queries) — the artifact
@@ -341,7 +309,7 @@ object Bench {
     // a flat {"queries": {name: {"sec": N}}} map; parsed with a regex so
     // the bench keeps zero JSON dependencies.
     val anchorDrift =
-      if (only.nonEmpty) 0
+      if (Harness.only.nonEmpty) 0
       else try {
         val txt = java.nio.file.Files.readString(
           java.nio.file.Paths.get("dev/baseline_per_query.json"))
@@ -355,7 +323,7 @@ object Bench {
         anchorDriftCount(
           results.collect { case (n, r) if r.ok => n -> r.sec }.toMap, anchors)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           // A missing/corrupt anchor file must not fail the bench, but a
           // silently disabled backstop would let a contended run clobber
           // the clean artifact with no signal — say so in the stdout tail.
@@ -374,7 +342,7 @@ object Bench {
     }
     val sentinelJson = probeJson(sentinelName, pass.scan)
     val heavyJson = probeJson(heavyName, pass.heavy)
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","value_suspect":$suspect,"failed_queries":$failed,"probe_failed":${pass.probeFailed},"passes":$passesRun,"over2x_vs_anchor":$anchorDrift,"queries":$qs,"gc_ms":$gcs,"runs":$runsPerQuery,"sentinel":$sentinelJson,"sentinel_heavy":$heavyJson,"sf":"$sfDir"}"""
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","value_suspect":$suspect,"failed_queries":$failed,"probe_failed":${pass.probeFailed},"passes":$passesRun,"over2x_vs_anchor":$anchorDrift,"queries":$qs,"gc_ms":$gcs,$censusMaps,"runs":$runsPerQuery,"sentinel":$sentinelJson,"sentinel_heavy":$heavyJson,"sf":"$sfDir"}"""
     // the full name→sec / name→gc maps are ~12k chars at 267+ queries;
     // the driver's round artifact keeps only the LAST 2000 stdout chars,
     // so printing the full line last guarantees the artifact's per-query
@@ -387,17 +355,17 @@ object Bench {
     // SparkEntry.queries, and the full map is one file away).
     // full runs only: a SPARK_GRAFT_ONLY dev slice must never clobber the
     // committed round artifact with a partial query map
-    if (only.isEmpty) {
+    if (Harness.only.isEmpty) {
       val latest = java.nio.file.Paths.get("dev/bench_latest.json")
       val existing =
         try Some(java.nio.file.Files.readString(latest))
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       val target = artifactTarget(suspect, existing)
       if (target != "dev/bench_latest.json")
         System.err.println(s"[bench] suspect run; clean artifact kept, writing $target")
       try java.nio.file.Files.write(java.nio.file.Paths.get(target),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable => System.err.println(s"[bench] $target: ${e.getMessage}") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] $target: ${e.getMessage}") }
     }
     println(line)
     val perQueryCs = results.map { case (_, r) =>

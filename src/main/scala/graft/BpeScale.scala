@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 
 /** One-shot scale probe for [[graft.operators.Bpe.trainBatched]] — the
   * measured (not oracle-graded) evidence behind the 64k-vocab claim:
   * trains `SPARK_GRAFT_BPE_MERGES` (default 2048) merges over the
   * documents table at `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with
-  * wall seconds, Spark job count, rounds used, and merges learned. The
+  * wall seconds, Spark job count and merges learned. The
   * job budget under test is the trainer's contract: jobs ≤ merges/8 + a
   * small constant (one ranking job per ROUND, not per merge, plus
   * amortized checkpoints). Results are recorded in BASELINE.md.
@@ -18,19 +16,8 @@ object BpeScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "2048").toInt
     val window = sys.env.getOrElse("SPARK_GRAFT_BPE_WINDOW", "512").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); (): Unit
-      }
-    })
+    val spark = Sessions.local("bpe-scale")
+    val census = Harness.Census.attach(spark)
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
     // The synthetic corpus has only ~31 distinct whitespace words — BPE
     // over word pre-tokens exhausts at ~89 merges (measured), far short
@@ -46,18 +33,17 @@ object BpeScale {
         |  i -> array_join(slice(split(trim(text), '\\s+'), i*3 + 1, 3), '_')
         |), ' ')""".stripMargin).as("text"))
     docs.count() // warm the scan outside the measured window
-    jobs.set(0)
-    val t0 = System.nanoTime()
-    val merges = operators.Bpe.trainBatched(docs, "text", nMerges,
-      window = window, maxRounds = math.max(16, nMerges / 4),
-      checkpointEvery = 8)
-    val learned = merges.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val rounds = merges.agg(org.apache.spark.sql.functions.max("rank")).head() // ranks are merge indices
-    val _ = rounds
+    var learned = 0L
+    val r = Harness.timed(spark, "bpe-train", 0L, census) {
+      learned = operators.Bpe.trainBatched(docs, "text", nMerges,
+        window = window, maxRounds = math.max(16, nMerges / 4),
+        checkpointEvery = 8).count()
+    }
+    require(r.ok, "BpeScale: training failed (see stderr)")
+    val jobs = r.counts.jobs
     println(s"""{"metric":"bpe_train_batched","merges":$learned,"requested":$nMerges,""" +
-      s""""window":$window,"jobs":${jobs.get()},"wall_sec":${math.round(wall * 100) / 100.0},""" +
-      s""""jobs_per_merge":${math.round(jobs.get().toDouble / math.max(1L, learned) * 1000) / 1000.0},""" +
+      s""""window":$window,"jobs":$jobs,"wall_sec":${math.round(r.sec * 100) / 100.0},""" +
+      s""""jobs_per_merge":${math.round(jobs.toDouble / math.max(1L, learned) * 1000) / 1000.0},""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
   }

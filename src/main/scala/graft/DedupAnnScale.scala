@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Retrieval, Similarity}
@@ -21,58 +20,16 @@ import graft.operators.{Dedup, Retrieval, Similarity}
   */
 object DedupAnnScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Shuffle-record accounting is keyed by job group (stage id → the
-    // group that launched it, task end → that group's counter), so a
-    // loaded machine's late task-end events from a previous probe land
-    // in the PREVIOUS probe's counter instead of skewing the next one —
-    // no cross-probe bleed by construction, unlike the earlier
-    // fixed-sleep drain.
-    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val groupRecords =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
-        (): Unit
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val g = stageGroup.get(t.stageId)
-        if (g != null && t.taskMetrics != null)
-          groupRecords
-            .computeIfAbsent(g, _ => new java.util.concurrent.atomic.AtomicLong(0))
-            .addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-        (): Unit
-      }
-    })
-    var probeSeq = 0
+    val spark = Sessions.local("dedup-ann-scale")
+    val census = Harness.Census.attach(spark)
+    // one timed call per probe: its shuffle records come from the census,
+    // keyed by the call's job group, so late task-end events of one probe
+    // cannot land in the next
     def measured(work: => Long): (Double, Long, Long) = {
-      probeSeq += 1
-      val group = s"scale-probe-$probeSeq"
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      val out = try work finally spark.sparkContext.clearJobGroup()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // the listener bus drains asynchronously: wait only for THIS
-      // group's counter to go stable (two consecutive reads equal),
-      // bounded at ~10 s — under-count is the sole remaining risk and
-      // stability covers it
-      def cnt: Long = Option(groupRecords.get(group)).map(_.get()).getOrElse(0L)
-      var prev = -1L
-      var tries = 0
-      while (tries < 50 && cnt != prev) {
-        prev = cnt
-        Thread.sleep(200)
-        tries += 1
-      }
-      (math.round(wall * 100) / 100.0, cnt, out)
+      var out = 0L
+      val r = Harness.timed(spark, "scale-probe", 0L, census) { out = work }
+      require(r.ok, "DedupAnnScale: probe failed (see stderr)")
+      (math.round(r.sec * 100) / 100.0, r.counts.shuffleRecords, out)
     }
 
     // ---- MinHash-LSH: the q_lsh_scale corpus shape at 1x and 10x -----------

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev utility: dump `.explain("formatted")` for named queries to files
   * (`args: sfDir outDir suffix name...`), e.g. plans/r19/q_x_before.txt.
   * Plans only — nothing executes, so this is safe to run on a loaded host.
-  * Mirrors the bench session's conf (local core count, AQE, shuffle
-  * partitions) so the dumped plan is the one the bench actually runs.
+  * Runs on the shipped session ([[Sessions.local]]), the one the bench and
+  * the oracle run, so the dumped plan is the one they execute.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,15 +18,7 @@ object PlanDump {
     }
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("plandump")
     new java.io.File(outDir).mkdirs()
     try names.foreach { n =>
       try {
@@ -35,7 +28,7 @@ object PlanDump {
           java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
         System.err.println(s"[plandump] $n -> $outDir/${n}_$suffix.txt")
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
     } finally spark.stop()

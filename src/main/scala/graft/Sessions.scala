@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory: one place for the scale-aware defaults.
+/** Session factory: one place for the scale-aware defaults, and the only
+  * session builder in the library — every main starts here.
   *
   * Tuned for the target deployment (many-executor cluster, ~100 TB) but
   * runnable on local[N]: AQE handles runtime re-planning (partition
@@ -33,5 +34,7 @@ object Sessions {
     spark
   }
 
-  def defaultCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `SPARK_GRAFT_CPUS` if set, else the processors this JVM may use. */
+  def defaultCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 }

@@ -738,7 +738,6 @@ object AacCodec {
       : (IcsInfo, Array[Long], Seq[(Int, Int, Int, Int)]) = {
       val globalGain = br.get(8)
       val info = common.getOrElse(readIcsInfo(br))
-      val wseq = info.wseq
       val isShort = info.isShort
       val maxSfb = info.maxSfb
       val groups = info.groups

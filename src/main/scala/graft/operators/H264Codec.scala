@@ -404,7 +404,7 @@ object H264Codec {
     * returns (slice RBSP, recon Y/U/V) so the inter encoder can use the
     * frame as a reference.
     */
-  private def intraSlice(plan: IntraPlan, cabac: Boolean = false,
+  private def intraSlice(plan: IntraPlan, cabac: Boolean,
                          deblock: Boolean = false):
       (Array[Byte], Array[Byte], Array[Byte], Array[Byte]) = {
     val w = plan.w; val h = plan.h
@@ -1772,8 +1772,8 @@ object H264Codec {
     */
   private def bSlice(p: InterPlan, w: Int, h: Int,
                      ref0past: H264Frame, refP: H264Frame,
-                     cabac: Boolean, deblock: Boolean = false,
-                     colMg: MotionGrid = null): Array[Byte] = {
+                     cabac: Boolean, deblock: Boolean,
+                     colMg: MotionGrid): Array[Byte] = {
     val temporal = p.bTemporal
     require(!temporal || colMg != null,
       "h264 fixture: temporal B needs the P frame's motion grid")

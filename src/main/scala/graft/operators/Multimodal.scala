@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -524,7 +524,7 @@ object Multimodal {
     * q_vp8_subpel discipline).
     */
   private[operators] def h264SubpelPlan(d: Long, w: Int, h: Int): H264Codec.InterPlan = {
-    val mbW = w / 16; val mbH = h / 16
+    val mbW = w / 16
     val tCols = mbW / 2
     def tile(m: Int): Int = ((m / mbW) / 2) * tCols + (m % mbW) / 2
     def tL1(m: Int): Int = ((37 * d + 23 * tile(m)) % 208 + 24).toInt

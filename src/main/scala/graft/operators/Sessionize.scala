@@ -142,8 +142,14 @@ object Sessionize {
         // where the old count() read 0
         coalesce(sum(when(col("prev_hi").isNotNull && col("prev_hi") >= col("lo"), 1L)
           .otherwise(0L)), lit(0L)).as("violations"),
-        collect_set(col("_c")).as("chunks"))
+        collect_set(col("_c")).as("chunks"),
+        // collect_set drops NULL, and so would the rows of a NULL chunk
+        coalesce(sum(when(col("_c").isNull, 1L)), lit(0L)).as("null_chunks"))
       .collect()(0)
+    val nullChunks = gate.getAs[Long]("null_chunks")
+    require(nullChunks == 0,
+      s"ewmaChunked: chunkExpr is NULL for $nullChunks key(s); every event " +
+      "needs a chunk id")
     val violations = gate.getAs[Long]("violations")
     require(violations == 0,
       s"ewmaChunked: chunk order disagrees with ($tsCol, $tieBreak) order " +

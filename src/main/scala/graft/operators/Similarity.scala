@@ -278,8 +278,8 @@ object Similarity {
       .orderBy(xxhash64(col("_id")), col("_id"))
       .limit(sampleCap)
       .collect()
-      .flatMap(r => Option(r.getSeq[Float](1))
-        .map(_.iterator.map(x => if (x == null) Double.NaN else x.toDouble).toArray))
+      .flatMap(r => Option(r.getSeq[java.lang.Float](1))
+        .map(_.iterator.map(x => if (x == null) Double.NaN else x.doubleValue).toArray))
     // corrupt rows (NULL vectors/elements, ragged lengths) are dropped from
     // the SEED sample — assignment still handles them downstream; and an
     // empty corpus seeds an empty centroid table (empty result, not a crash).
@@ -651,8 +651,8 @@ object Similarity {
       .orderBy(xxhash64(col("_id")), col("_id"))
       .limit(sampleCap)
       .collect()
-      .flatMap(r => Option(r.getSeq[Float](1))
-        .map(_.iterator.map(x => if (x == null) Double.NaN else x.toDouble).toArray))
+      .flatMap(r => Option(r.getSeq[java.lang.Float](1))
+        .map(_.iterator.map(x => if (x == null) Double.NaN else x.doubleValue).toArray))
     val intact = raw.filter(v => v.nonEmpty && !v.exists(_.isNaN))
     val sample = intact.headOption.map(h =>
       intact.filter(_.length == h.length)).getOrElse(Array.empty)

@@ -172,9 +172,6 @@ object DataQuality {
     val digits = (1 to 9).map { d =>
       (d, math.log10(1.0 + 1.0 / d))
     }
-    val expected = digits.map { case (d, p) =>
-      struct(lit(d).as("digit"), lit(p).as("p"))
-    }
     val obs = df
       .select(floor(col(valueCol)).cast("long").as("v"))
       .filter(col("v") >= 1L)

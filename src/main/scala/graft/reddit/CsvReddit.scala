@@ -1,6 +1,6 @@
 package graft.reddit
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
@@ -13,7 +13,9 @@ import graft.operators.Relational
   *  - `EMPTYASNULL`/`BLANKSASNULL` — empty or whitespace-only fields → NULL;
   *  - `TRUNCATECOLUMNS` — silently cut strings to the declared varchar widths;
   *  - `ACCEPTINVCHARS AS ' '` — undecodable bytes (read as U+FFFD) → space;
-  *  - `MAXERROR n` — tolerate up to n unparseable records, then fail;
+  *  - `MAXERROR n` — tolerate up to n unparseable records, then fail; a
+  *    record is unparseable when its field count is wrong or a numeric
+  *    field holds text that does not cast to its type;
   *  - `ACCEPTANYDATE`/`TIMEFORMAT 'auto'` — lenient timestamp cast, bad → NULL;
   *  - boolean quirk — "True"/"False" *strings* in the file (FIXTURES.md §1)
   *    parsed to BooleanType here, formatted back on write.
@@ -51,23 +53,43 @@ object CsvReddit {
     readChecked(spark, path, maxError).data
 
   /** [[read]] plus MAXERROR diagnostics: count and a bounded sample of the
-    * rejected raw records (`take` stops scanning once it has the sample —
-    * no second full pass over a big load).
+    * rejected records (`take` stops scanning once it has the sample — no
+    * second full pass over a big load). A record rejected for a bad numeric
+    * field has no `_corrupt_record` text; its sample entry is its fields
+    * joined by commas.
     */
   def readChecked(spark: SparkSession, path: String, maxError: Long = 100L,
                   sampleRows: Int = 5): Load = {
     val raw = rawRead(spark, path)
       .cache() // one pass for the budget count, one for the parse
 
-    val bad = raw.filter(col("_corrupt_record").isNotNull).count()
+    val rejected = col("_corrupt_record").isNotNull || castRejected
+    val bad = raw.filter(rejected).count()
     if (bad > maxError) throw ErrorBudgetExceeded(bad, maxError)
     val sample =
       if (bad == 0 || sampleRows == 0) Seq.empty
-      else badRecords(spark, path).take(sampleRows).map(_.getString(0)).toSeq
+      else raw.filter(rejected)
+        .select(coalesce(col("_corrupt_record"),
+          concat_ws(",", RedditSchema.columns.map(col): _*)))
+        .take(sampleRows).map(_.getString(0)).toSeq
 
-    val good = raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
+    val good = raw.filter(!rejected).drop("_corrupt_record")
     Load(parse(good), bad, sample)
   }
+
+  /** Numeric columns and their types. Under ANSI casts a non-numeric value
+    * would abort the whole load, where COPY rejects just that record.
+    */
+  private val numericTypes =
+    Seq("score" -> "int", "num_comments" -> "int", "upvote_ratio" -> "double",
+      "selftext_length" -> "int")
+
+  /** A numeric field holds text that does not cast (empty and blank
+    * fields are NULL, not errors).
+    */
+  private def castRejected: Column = numericTypes.map { case (c, t) =>
+    col(c).isNotNull && trim(col(c)) =!= "" && col(c).try_cast(t).isNull
+  }.reduce(_ || _)
 
   /** The rejected raw records of a load — what the reference reads back from
     * `sys_load_error_detail` after a COPY (s3_to_redshift.py:312-331).
@@ -77,7 +99,10 @@ object CsvReddit {
       .filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_record"))
 
-  /** String-typed raw rows → typed schema with COPY null/truncation rules. */
+  /** String-typed raw rows → typed schema with COPY null/truncation rules.
+    * Numeric fields must cast (see [[readChecked]], which rejects the rows
+    * that do not); timestamps that do not parse become NULL.
+    */
   def parse(raw: DataFrame): DataFrame = {
     // EMPTYASNULL + BLANKSASNULL: whitespace-only → NULL (content otherwise
     // untouched — TRIMBLANKS trailing-blank removal would corrupt the
@@ -102,7 +127,7 @@ object CsvReddit {
       col("author"),
       // lenient cast = ACCEPTANYDATE/TIMEFORMAT auto: handles both
       // "yyyy-MM-dd HH:mm:ss" and ".SSSSSS", anything else → NULL
-      col("created_utc").cast("timestamp").as("created_utc"),
+      col("created_utc").try_cast("timestamp").as("created_utc"),
       col("url"),
       col("upvote_ratio").cast("double").as("upvote_ratio"),
       bool("over_18").as("over_18"),
@@ -110,7 +135,7 @@ object CsvReddit {
       bool("stickied").as("stickied"),
       col("selftext"),
       col("subreddit"),
-      col("extraction_timestamp").cast("timestamp").as("extraction_timestamp"),
+      col("extraction_timestamp").try_cast("timestamp").as("extraction_timestamp"),
       col("selftext_length").cast("int").as("selftext_length"),
       bool("is_nsfw").as("is_nsfw"))
   }

@@ -2,6 +2,8 @@ package graft.reddit
 
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The whole reference DAG (reddit_pipeline.py:20-44) collapsed into one
@@ -59,15 +61,22 @@ object Pipeline {
     */
   def runWithRetry(spark: SparkSession, csvPath: String, tableRoot: String,
                    now: Option[Timestamp] = None, retries: Int = 1,
-                   retryDelayMs: Long = 15000L): Result = {
+                   retryDelayMs: Long = 15000L): Result =
+    retrying(retries, retryDelayMs)(run(spark, csvPath, tableRoot, now))
+
+  /** Run `body`, re-running it up to `retries` times after a non-fatal
+    * failure, and rethrow the last failure. Fatal errors (OOM, linkage)
+    * and interrupts are never retried.
+    */
+  private[reddit] def retrying[T](retries: Int, delayMs: Long)(body: => T): T = {
     var attempt = 0
     while (true) {
-      try return run(spark, csvPath, tableRoot, now)
+      try return body
       catch {
-        case e: Throwable if attempt < retries =>
+        case NonFatal(e) if attempt < retries =>
           attempt += 1
           System.err.println(s"[pipeline] attempt $attempt failed (${e.getMessage}); retrying")
-          Thread.sleep(retryDelayMs)
+          Thread.sleep(delayMs)
       }
     }
     sys.error("unreachable")

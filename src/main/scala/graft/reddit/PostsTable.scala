@@ -120,7 +120,7 @@ object PostsTable {
   // --- version writers ------------------------------------------------------
 
   private def writeVersion(df: DataFrame, root: String, v: Long, key: String,
-                           sidecar: Map[String, String] = Map.empty): Unit = {
+                           sidecar: Map[String, String]): Unit = {
     val tmp = Paths.get(root, s"_tmp_v_$v")
     deleteRecursively(tmp)
     // date-partitioned when the batch carries the extraction clock (one

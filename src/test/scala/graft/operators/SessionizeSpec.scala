@@ -82,6 +82,20 @@ class SessionizeSpec extends SparkTestBase {
     assert(ex.getMessage.contains("monotone"), ex.getMessage)
   }
 
+  test("ewmaChunked: a NULL chunk id fails loudly instead of dropping its rows") {
+    import org.apache.spark.sql.functions.{col, dayofmonth, lit, when}
+    val ev = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 1L, 100L),
+      (1L, ts("2024-01-02 10:00:00"), 2L, 20L),
+      (2L, ts("2024-01-01 08:00:00"), 3L, 7L))
+      .toDF("user_id", "ts", "event_id", "cents")
+    val ex = intercept[IllegalArgumentException] {
+      Sessionize.ewmaChunked(ev, "user_id", "ts", "event_id", "cents", 1L, 4L,
+        when(col("event_id") =!= 3L, dayofmonth(col("ts"))).otherwise(lit(null)))
+    }
+    assert(ex.getMessage.contains("NULL"), ex.getMessage)
+  }
+
   test("funnel: order matters, greedy earliest-match, strict-after on ties, repartition-stable") {
     val ev = Seq(
       // user 1: full ordered funnel

@@ -616,4 +616,22 @@ class SimilaritySpec extends SparkTestBase {
       Similarity.ivfPqReadCodebook(spark, path))
     assert(ex.getMessage.contains("_pq_codebook"), ex.getMessage)
   }
+
+  test("a vector with a NULL element seeds no k-means centroid and no PQ codeword") {
+    // [1.0, NULL] must be dropped from the seed sample, not read as (1.0, 0.0)
+    val corpus = spark.sql(
+      """select * from values
+        |  (0L, array(cast(1.0 as float), cast(null as float))),
+        |  (1L, array(cast(0.0 as float), cast(1.0 as float))),
+        |  (2L, array(cast(-1.0 as float), cast(0.0 as float))),
+        |  (3L, array(cast(0.0 as float), cast(-1.0 as float)))
+        |  as t(vec_id, vec)""".stripMargin)
+    val cents = Similarity.ivfCentroidsKmeans(corpus, "vec_id", "vec", cells = 4)
+    assert(cents.size == 3, cents)
+    assert(!cents.exists(_._2 == Seq(1.0f, 0.0f)), cents)
+    val cb = Similarity.pqTrain(corpus, "vec_id", "vec", m = 1, k = 4, iters = 2)
+    assert(cb.k == 3, s"codebook has ${cb.k} codewords")
+    assert(!cb.flat.grouped(2).exists(_.sameElements(Array(1.0f, 0.0f))),
+      cb.flat.toSeq)
+  }
 }

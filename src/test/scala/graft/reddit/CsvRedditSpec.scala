@@ -90,6 +90,38 @@ class CsvRedditSpec extends SparkTestBase {
     assert(r.badSample.head.contains("badid1"))
   }
 
+  test("MAXERROR: a non-numeric numeric field rejects its row; a bad timestamp reads NULL") {
+    val dir = java.nio.file.Files.createTempDirectory("csvcast")
+    val p = dir.resolve("cast.csv")
+    val header = RedditSchema.columns.mkString(",")
+    def row(id: String, score: String = "5", ratio: String = "0.9",
+            created: String = "2025-03-20 10:00:00", len: String = "4") =
+      Seq(id, "a title", score, "2", "alice", created, "http://x", ratio,
+        "False", "False", "False", "body", "stocks",
+        "2025-03-20 11:00:00.123456", len, "False").mkString(",")
+    java.nio.file.Files.writeString(p, Seq(header,
+      row("good1"), row("good2", score = " ", len = ""),
+      row("badscore", score = "lots"), row("badratio", ratio = "n/a"),
+      row("badlen", len = "4.5"), row("badts", created = "yesterday"))
+      .mkString("", "\n", "\n"))
+
+    val load = CsvReddit.readChecked(spark, p.toString, maxError = 3)
+    assert(load.badCount == 3L)
+    val ids = load.data.select("id").collect().map(_.getString(0)).toSet
+    assert(ids == Set("good1", "good2", "badts"))
+    assert(load.badSample.size == 3 && load.badSample.exists(_.startsWith("badscore,")),
+      load.badSample)
+    val byId = load.data.collect().map(r => r.getAs[String]("id") -> r).toMap
+    assert(byId("badts").isNullAt(byId("badts").fieldIndex("created_utc")))
+    assert(byId("good2").isNullAt(byId("good2").fieldIndex("score")))
+    assert(byId("good1").getAs[Int]("score") == 5)
+
+    val ex = intercept[CsvReddit.ErrorBudgetExceeded] {
+      CsvReddit.read(spark, p.toString, maxError = 2)
+    }
+    assert(ex.bad == 3L && ex.budget == 2L)
+  }
+
   test("header probe reads column names without parsing the body") {
     assert(CsvReddit.headerProbe(spark, fix20250318) == RedditSchema.columns)
   }

@@ -242,6 +242,31 @@ class PipelineSpec extends SparkTestBase {
     assert(r.loaded > 0)
   }
 
+  test("retrying: a failing run is retried exactly `retries` times, then rethrown") {
+    var calls = 0
+    val ex = intercept[IllegalStateException] {
+      Pipeline.retrying(retries = 2, delayMs = 0L) {
+        calls += 1
+        throw new IllegalStateException(s"attempt $calls")
+      }
+    }
+    assert(calls == 3 && ex.getMessage == "attempt 3")
+    calls = 0
+    assert(Pipeline.retrying(retries = 2, delayMs = 0L) {
+      calls += 1
+      if (calls < 2) throw new IllegalStateException("flaky") else calls
+    } == 2)
+    // fatal errors and interrupts are not retried
+    calls = 0
+    intercept[InterruptedException] {
+      Pipeline.retrying(retries = 2, delayMs = 0L) {
+        calls += 1
+        throw new InterruptedException("stop")
+      }
+    }
+    assert(calls == 1)
+  }
+
   test("acceptance queries (query-test.py) run on the registered views") {
     val root = Files.createTempDirectory("posts_table4").toString
     Pipeline.run(spark, fixB, root)
@@ -279,7 +304,6 @@ class PipelineSpec extends SparkTestBase {
 
   test("time travel: a retained version reads back exactly; vacuum bounds history") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("tt_spec").toString
     val v0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     PostsTable.create(v0, root, key = "id")

@@ -400,7 +400,6 @@ class StreamsSpec extends SparkTestBase {
   }
 
   test("hllRegisterSink: streamed registers equal the batch sketch; restart merges") {
-    import spark.implicits._
     val inDir = Files.createTempDirectory("hll_in").toString
     val ckpt = Files.createTempDirectory("hll_ckpt").toString
     val root = Files.createTempDirectory("hll_root").toString + "/t"
